@@ -33,6 +33,7 @@ from pyspark.sql import types as T
 
 from lash_spark.hashing import U64, rolling_window_hashes
 from lash_spark.operators.lsh import pairs_from_keys
+from lash_spark.operators.verify import side_fits_broadcast
 
 _U64_MAX = U64(0xFFFFFFFFFFFFFFFF)
 
@@ -281,25 +282,19 @@ def exact_substring_pairs(
         .select(
             F.col(id_col), make_window_set_udf(min_len)(F.col(text_col)).alias("ws")
         )
-        # materialize ONCE: the set subtree feeds both join sides with
-        # different join keys, so exchange reuse never fires and the window
-        # UDF (plus the semi-join above it) would run twice — the same
-        # defect exact_jaccard_join fixed in r5 (~2x on the verify step).
+        # materialize ONCE: the set subtree feeds both join sides, and the
+        # window UDF (plus the semi-join above it) must not run twice.
         # Eager: the measured-broadcast decision needs the real footprint.
         .localCheckpoint(eager=True)
     )
     st = wsets.agg(
         F.count(F.lit(1)).alias("n"), F.sum(F.size("ws")).alias("tot")
     ).first()
-    from lash_spark.operators.verify import _reuse_broadcast_cap
-
     # aliased views of the one materialized relation, keyed on the same
     # column: the second join reuses the first's broadcast (or shuffled)
-    # exchange instead of building it twice (see _verify_joined_once)
+    # exchange instead of building it twice (see verify._verify)
     wa, wb = wsets.alias("_wa"), wsets.alias("_wb")
-    if (st["tot"] or 0) * 8 + (st["n"] or 0) * 48 < _reuse_broadcast_cap(
-        pairs.sparkSession
-    ):
+    if side_fits_broadcast(pairs.sparkSession, st["n"] or 0, st["tot"] or 0):
         wa, wb = F.broadcast(wa), F.broadcast(wb)
     return (
         pairs.join(wa, F.col(a) == F.col(f"_wa.{id_col}"))

@@ -377,7 +377,8 @@ def test_intersect_auto_picks_jvm_at_tiny_volume(spark):
     """The auto engine must route tiny member-set volumes to the JVM
     expression (the Python round-trip measured slower than the whole JVM
     intersection below ~1M member hashes): at this scale the verify plan
-    contains no Python evaluation."""
+    contains no Python evaluation — in the self mode over persisted sets
+    and in the cross mode that re-shingles."""
     from lash_spark.operators.lsh import lsh_candidate_pairs
     from lash_spark.operators.normalize import with_normalized_text
     from lash_spark.operators.signatures import build_signatures
@@ -397,3 +398,17 @@ def test_intersect_auto_picks_jvm_at_tiny_volume(spark):
     plan = verified._jdf.queryExecution().executedPlan().toString()
     assert "ArrowEvalPython" not in plan and "BatchEvalPython" not in plan
     sigs.unpersist()
+
+    # the cross mode without persisted sets measures the same volume gate
+    from lash_spark.pipeline import cross_dataset_pairs
+
+    # split by url, so duplicate families straddle the two sides
+    q = pages.filter("pmod(hash(url), 2) = 0")
+    r = pages.filter("pmod(hash(url), 2) = 1")
+    held = []
+    cross = cross_dataset_pairs(q, r, persist_shingles=False, unpersist_into=held)
+    assert cross.count() > 0
+    plan = cross._jdf.queryExecution().executedPlan().toString()
+    assert "ArrowEvalPython" not in plan and "BatchEvalPython" not in plan
+    for df in held:
+        df.unpersist()
