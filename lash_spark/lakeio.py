@@ -1,14 +1,11 @@
 """Table catalog + lineage/metrics + checkpoint/resume (O6).
 
-Iceberg is the production target (partition transforms, snapshot resume);
-the sandbox has no Iceberg jars, so the catalog is an abstraction with two
-backends behind one API:
-
-- ``IcebergCatalog``: used when a Spark catalog with Iceberg support is
-  configured (``spark.sql.catalog.<name>``) — writeTo().append(),
-  overwritePartitions(), table properties for run params.
-- ``ParquetCatalog``: directory-of-parquet tables with identical layout +
-  a JSON sidecar for table properties. What tests run on.
+One backend, ``ParquetCatalog``: directory-of-parquet tables plus a JSON
+sidecar for table properties. Its semantics are Iceberg-shaped so an
+Iceberg backend could sit behind the same API — append, dynamic partition
+overwrite (``overwritePartitions()``), staged replace (MERGE INTO /
+row-level delete), table properties for run params — but no such backend
+exists: no Iceberg jars ship with the engine.
 
 Resume semantics (north_rule): every stage records a completion marker
 keyed by params_hash; a rerun with the same params skips completed stages,
@@ -26,6 +23,16 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 METRICS_TABLE = "stage_metrics"
+_METRICS_FIELDS = (
+    ("stage", "string"),
+    ("params_hash", "string"),
+    ("wall_ms", "double"),
+    ("input_rows", "bigint"),
+    ("output_rows", "bigint"),
+    ("status", "string"),
+    ("ts", "double"),
+    ("extra", "string"),
+)
 
 
 class ParquetCatalog:
@@ -203,11 +210,12 @@ class ParquetCatalog:
         }
         import pandas as pd
 
-        # pandas-backed (LocalTableScan) — same rationale as mark_partitions
+        # pandas-backed (LocalTableScan) — same rationale as mark_partitions.
+        # The DDL schema maps pandas columns by POSITION, so the frame's
+        # columns are pinned to the schema order, not the dict's.
         df = self.spark.createDataFrame(
-            pd.DataFrame([row], dtype=object),
-            "stage string, params_hash string, wall_ms double, input_rows bigint, "
-            "output_rows bigint, status string, ts double, extra string",
+            pd.DataFrame([row], columns=[c for c, _ in _METRICS_FIELDS], dtype=object),
+            ", ".join(f"{c} {t}" for c, t in _METRICS_FIELDS),
         )
         self.append(df, METRICS_TABLE)
 

@@ -92,7 +92,13 @@ def make_srp_udf(dim: int, n_planes: int, seed: int, n_tables: int = 1):
     independent projections (the banded-LSH analog for cosine: a near-dup
     pair collides in at least one table w.p. 1-(1-p^planes)^tables, the
     same S-curve as MinHash bands). P is regenerated deterministically per
-    worker. Returns long (n_tables == 1) or array<long>."""
+    worker. Returns long (n_tables == 1) or array<long>.
+
+    Marked non-deterministic (the value is deterministic) so it runs once
+    per row: the ``posexplode`` of the table keys, like the fingerprint
+    UDF's ``explode`` (substring.make_fingerprint_udf), would otherwise
+    get an inferred ``size(keys) > 0`` filter pushed below the projection
+    with the UDF substituted into it."""
 
     @F.pandas_udf(T.ArrayType(T.LongType()) if n_tables > 1 else T.LongType())
     def srp(vecs: pd.Series) -> pd.Series:
@@ -112,7 +118,7 @@ def make_srp_udf(dim: int, n_planes: int, seed: int, n_tables: int = 1):
             return pd.Series(packed[:, 0])
         return pd.Series(list(packed))
 
-    return srp
+    return srp.asNondeterministic()
 
 
 def srp_topk(

@@ -50,20 +50,57 @@ def with_normalized_text(
     return out.filter(F.length(out_col) >= min_len)
 
 
+# Estimated plan bytes one Python-evaluated partition should carry before
+# another partition is worth its fixed cost. Every partition an Arrow UDF
+# runs over pays ~0.3 s of task time (worker hand-off, Arrow stream set-up,
+# task launch) whatever its size: measured on local[4], the fingerprint UDF
+# over the 1.5k-doc perfbench segment (2.6 MB of text, 0.83 MB estimated)
+# took 2.6-3.2 s on its 31 file partitions against 0.7 s coalesced to 4.
+# The kernels themselves run at ~0.5 s per estimated MB, so 8 MiB per task
+# keeps that fixed cost under ~10% of each task.
+_PYTHON_TASK_BYTES = 8 * 1024 * 1024
+
+
+def _task_slots(sc) -> int:
+    """Tasks the scheduler can run at once (cores / task cpus, summed over
+    live executors); defaultParallelism while no executor is up yet."""
+    jsc = sc._jsc.sc()
+    rp = jsc.resourceProfileManager().defaultResourceProfile()
+    return jsc.maxNumConcurrentTasks(rp) or sc.defaultParallelism
+
+
 def fan_out(df: DataFrame, min_parallelism: int | None = None) -> DataFrame:
-    """Repartition a GENUINELY under-partitioned frame so map-heavy stages
-    (per-position explodes, Arrow UDFs) actually use the cluster — the
-    single-small-parquet-file case: the sf0.1 documents table scans as ONE
-    partition against 256-way default parallelism, so every downstream
-    map pass ran single-core while 31 cores idled (measured: the SA window
-    explode alone was ~2 s per pass at sf0.1). A keyless repartition is
-    not free (full payload shuffle + the SPARK-23207 per-task sort), so an
-    input already within 4x of the target keeps its layout — at real scale
-    inputs arrive with >> cores splits and this is a no-op. Same rule
-    build_signatures has used since round 6 batch 1, now shared."""
-    target = min_parallelism or df.sparkSession.sparkContext.defaultParallelism
-    if df.rdd.getNumPartitions() * 4 < target:
+    """Size the partitions of the input to a map-heavy stage (per-position
+    explodes, Arrow UDFs) to the cluster, from both sides:
+
+    - GENUINELY under-partitioned input is repartitioned to
+      ``min_parallelism`` (default parallelism if unset) — the
+      single-small-parquet-file case: the sf0.1 documents table scans as
+      ONE partition against 256-way default parallelism, so every
+      downstream map pass ran single-core while 31 cores idled (measured:
+      the SA window explode alone was ~2 s per pass at sf0.1). A keyless
+      repartition is not free (full payload shuffle + the SPARK-23207
+      per-task sort), so an input within 4x of the target keeps its layout.
+    - Over-partitioned SMALL input — many small files, each its own scan
+      partition — is coalesced (narrow, no shuffle) to
+      ``max(task slots, estimated bytes / _PYTHON_TASK_BYTES)``, because a
+      Python stage pays a fixed cost per partition that dwarfs the kernel
+      work of a small one (see ``_PYTHON_TASK_BYTES``). Inputs whose
+      partitions already carry that many bytes keep their layout.
+
+    Both counts come off the frame's own query execution: its RDD's
+    partition count (for a plan with a shuffle this runs the shuffle
+    stages, as ``df.rdd`` did) and the optimizer's size estimate."""
+    sc = df.sparkSession.sparkContext
+    qe = df._jdf.queryExecution()
+    n = qe.toRdd().getNumPartitions()
+    target = min_parallelism or sc.defaultParallelism
+    if n * 4 < target:
         return df.repartition(target)
+    est = qe.optimizedPlan().stats().sizeInBytes()
+    sized = max(_task_slots(sc), -(-est // _PYTHON_TASK_BYTES))
+    if n > sized:
+        return df.coalesce(sized)
     return df
 
 

@@ -204,15 +204,16 @@ def build_signatures(
     """The signatures table (D6 analog): (id, minhash, simhash, bands,
     n_shingles[, shingles]). Narrow projection so the parquet scan prunes
     to (id, text) only (plus ``carry_cols`` passthroughs, e.g. the resume
-    content fingerprint). If the input has fewer partitions than the
-    cluster's parallelism (single small parquet file), repartition so the
-    map-only UDF stage actually fans out — at real scale inputs arrive
-    with >> cores splits and this is a no-op."""
+    content fingerprint). The input's partitions are sized to the cluster
+    first (``fan_out``): a single small parquet file is repartitioned so
+    the map-only UDF stage fans out, and a small input spread over many
+    files is coalesced so the UDF does not pay its per-partition cost once
+    per file — at real scale inputs arrive as >> cores splits of real size
+    and this is a no-op."""
     from lash_spark.operators.normalize import fan_out
 
-    # fan out only GENUINELY under-partitioned inputs (a single small
-    # parquet file) — see fan_out: a 128-partition synth input vs 256
-    # target keeps its layout (repartitioning it was a pure-waste 100 MB
-    # text shuffle on the 50k bench query).
+    # shuffle only GENUINELY under-partitioned inputs — see fan_out: a
+    # 128-partition synth input vs 256 target is not repartitioned (that
+    # was a pure-waste 100 MB text shuffle on the 50k bench query).
     narrow = fan_out(docs.select(id_col, text_col, *carry_cols), min_parallelism)
     return add_signatures(narrow, params, plan, text_col, with_shingles).drop(text_col)

@@ -33,6 +33,7 @@ from pyspark.sql import types as T
 
 from lash_spark.hashing import U64, rolling_window_hashes
 from lash_spark.operators.lsh import pairs_from_keys
+from lash_spark.operators.normalize import fan_out
 from lash_spark.operators.verify import side_fits_broadcast
 
 _U64_MAX = U64(0xFFFFFFFFFFFFFFFF)
@@ -73,6 +74,16 @@ def winnow_fingerprints(data: bytes, min_len: int, k: int = 32) -> np.ndarray:
 
 
 def make_fingerprint_udf(min_len: int, k: int = 32):
+    """text -> winnowed fingerprints (array<long>), map-only.
+
+    Marked NON-DETERMINISTIC (the value is deterministic), like
+    verify._inter_size_udf: ``explode`` makes Catalyst infer a
+    ``size(fp) > 0 AND isnotnull(fp)`` filter and push it below the
+    projection, substituting the UDF — two ArrowEvalPython nodes, every
+    document fingerprinted twice, and the pushed copy lands below any
+    ``fan_out`` coalesce. The flag keeps the filter above the one
+    evaluation; call sites reference the column once."""
+
     @F.pandas_udf(T.ArrayType(T.LongType()))
     def fp_udf(texts: pd.Series) -> pd.Series:
         out = []
@@ -81,12 +92,17 @@ def make_fingerprint_udf(min_len: int, k: int = 32):
             out.append(winnow_fingerprints(data, min_len, k).view(np.int64))
         return pd.Series(out)
 
-    return fp_udf
+    return fp_udf.asNondeterministic()
 
 
 def make_window_set_udf(win_len: int):
     """text -> unique hashes of every length-``win_len`` byte window
-    (array<long>), map-only. One rolling-hash pass per document."""
+    (array<long>), map-only. One rolling-hash pass per document.
+
+    Non-deterministic for the same reason as the fingerprint UDF: the
+    ``arrays_overlap`` verify filter implies ``isnotnull(ws)``, which
+    Catalyst would push below the candidate semi-join — hashing every
+    document, not only candidates, on top of the real evaluation."""
 
     @F.pandas_udf(T.ArrayType(T.LongType()))
     def win_udf(texts: pd.Series) -> pd.Series:
@@ -97,7 +113,7 @@ def make_window_set_udf(win_len: int):
             out.append(np.unique(rolling_window_hashes(buf, win_len)).view(np.int64))
         return pd.Series(out)
 
-    return win_udf
+    return win_udf.asNondeterministic()
 
 
 # Ceiling on materialized (pos_a, pos_b) hash-match pairs in the
@@ -255,7 +271,9 @@ def exact_substring_pairs(
     expand; a routed bucket logs a warning) — the exhaustive configuration
     measured non-viable at 500k docs is opt-in via an explicit huge
     ``star_threshold``."""
-    d = docs.select(F.col(id_col), F.col(text_col))
+    # partitions sized for the two Python stages below (fan_out), before
+    # the candidate restriction so it reads the scan's own layout
+    d = fan_out(docs.select(F.col(id_col), F.col(text_col)))
     if candidates is not None:
         d = d.join(candidates.select(id_col).distinct(), id_col, "left_semi")
     fp = make_fingerprint_udf(min_len, k)
@@ -328,8 +346,8 @@ def cross_substring_overlap(
     window-set check. No per-pair Python."""
     from lash_spark.operators.lsh import cross_pairs_from_keys
 
-    dq = docs_q.select(F.col(id_col), F.col(text_col))
-    dr = docs_r.select(F.col(id_col), F.col(text_col))
+    dq = fan_out(docs_q.select(F.col(id_col), F.col(text_col)))
+    dr = fan_out(docs_r.select(F.col(id_col), F.col(text_col)))
     fp = make_fingerprint_udf(min_len, k)
 
     def keys(d):
